@@ -733,4 +733,68 @@ class GraphSpec extends AnyFunSuite {
       .as[(Long, Option[Long], Option[Long])].collect().toSet
     assert(a === b && a.nonEmpty)
   }
+
+  // Spark jobs launched by one operator call plus the collect of its
+  // result, counted by a listener (the IoSpec job-count pattern). Pinned
+  // so a change to the round loops cannot add jobs unnoticed; a change
+  // that removes jobs lowers the pin in the same commit. Adaptive
+  // execution makes some counts vary by a job or two between runs of the
+  // same code (boruvkaMst 59-61, scc 211-212), so each pin is the largest
+  // count seen over repeated runs.
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
+
+  test("round-based operators launch no more Spark jobs than pinned") {
+    def lcg(seed: Long): Iterator[Long] =
+      Iterator.iterate(seed)(x => (x * 6364136223846793005L + 1442695040888963407L))
+    val chain = (1L until 200L).map(i => (i + 1, i)).toDF("a", "b")
+    val sccFixture = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L),
+      (10L, 11L), (11L, 12L), (12L, 10L), (12L, 20L), (20L, 21L),
+      (35L, 34L), (34L, 33L), (33L, 32L), (32L, 31L)).toDF("a", "b")
+    val misPairs = lcg(3L).take(600).grouped(2).collect {
+      case Seq(x, y) => (Math.floorMod(x, 50L), Math.floorMod(y, 50L))
+    }.toSeq.filter { case (a, b) => a != b }
+    val misEdges = (misPairs ++ misPairs.map(_.swap)).distinct.toDF("a", "b")
+    val mstEdges = Seq(
+      (1L, 2L, 5L), (2L, 3L, 6L), (3L, 4L, 7L), (4L, 5L, 8L), (5L, 6L, 9L),
+      (1L, 6L, 9L), (2L, 5L, 20L), (3L, 6L, 1L), (100L, 101L, 3L))
+      .toDF("a", "b", "w")
+    val path = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val counts = Map(
+      "connectedComponentsStar" -> jobsOf(
+        Graph.connectedComponentsStar(chain, "a", "b", 15).collect()),
+      "stronglyConnectedComponents" -> jobsOf(
+        Graph.stronglyConnectedComponents(sccFixture, "a", "b").collect()),
+      "lubyMis" -> jobsOf(Graph.lubyMis(misEdges, "a", "b").collect()),
+      "boruvkaMst" -> jobsOf(
+        Graph.boruvkaMst(mstEdges, "a", "b", "w").collect()),
+      "hyperAnf" -> jobsOf(Graph.hyperAnf(path, "a", "b",
+        Seq(1L, 6L).toDF("v"), "v", maxDepth = 3, lgK = 12).collect()),
+      "bfsLayers" -> jobsOf(Graph.bfsLayers(path, "a", "b",
+        Seq(1L).toDF("v"), "v", 3).collect()))
+    val pinned = Map(
+      "connectedComponentsStar" -> 90,
+      "stronglyConnectedComponents" -> 212,
+      "lubyMis" -> 41,
+      "boruvkaMst" -> 61,
+      "hyperAnf" -> 23,
+      "bfsLayers" -> 15)
+    for ((op, n) <- counts)
+      assert(n <= pinned(op), s"$op launched $n jobs, pinned ${pinned(op)} " +
+        s"(all counts: $counts)")
+  }
 }

@@ -19,6 +19,12 @@ import graft.ops.Aggregations
   */
 object SilverToGold {
 
+  /** Recompute and overwrite the three gold tables from silver. The three
+    * sink writes run concurrently and each commits on its own, so a failed
+    * run can leave gold partly committed: some tables rewritten, the
+    * others stale or partial. The failure still propagates; rerun until it
+    * succeeds (each write is a full overwrite, so a rerun converges).
+    */
   def run(spark: SparkSession, cfg: PipelineConfig): Unit = {
     val silver = Sources.silverParquet(spark, cfg.silverPath)
     // P7 — empty-input short-circuit (silver_to_gold.py:122-124)

@@ -89,36 +89,38 @@ object Clustering {
     val base = df.select(col(id).cast("string").as("__id"), col(vec).as("__v"))
       .withColumn("__nrm", l2Norm(col("__v")))
       .localCheckpoint()
-    val seedBase =
-      if (seedSampleMod == 1L) base
-      else {
-        val sampled = base
-          .filter(pmod(xxhash64(col("__id")), lit(seedSampleMod)) === 0)
-          .localCheckpoint() // the k seeding scans iterate this tiny frame
-        if (sampled.count() < k) base else sampled
-      }
-    def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
-      r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toSeq
-    val first = seedBase.withColumn("__h", md5(col("__id")))
-      .orderBy(col("__h"), col("__id"))
-      .limit(1).select(col("__v"), col("__id")).collect()
-    var centroids: Seq[Seq[Double]] = first.toSeq.map(vecOf)
-    var chosen: Set[String] = first.map(_.getString(1)).toSet
-    while (centroids.nonEmpty && centroids.size < k) {
-      val bestCos = centroids.map { cvec =>
-        val cn = math.sqrt(cvec.map(x => x * x).sum)
-        val safe = if (cn == 0.0) 1.0 else cn
-        dot(col("__v"), typedlit(cvec)) / (col("__nrm") * lit(safe))
-      }
-      val next = seedBase.filter(!col("__id").isInCollection(chosen))
-        .orderBy(array_max(array(bestCos: _*)).asc, col("__id"))
+    // the k seeding scans iterate this tiny frame
+    val sampled =
+      if (seedSampleMod == 1L) None
+      else Some(base
+        .filter(pmod(xxhash64(col("__id")), lit(seedSampleMod)) === 0)
+        .localCheckpoint())
+    try {
+      val seedBase = sampled.filter(_.count() >= k).getOrElse(base)
+      def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
+        r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toSeq
+      val first = seedBase.withColumn("__h", md5(col("__id")))
+        .orderBy(col("__h"), col("__id"))
         .limit(1).select(col("__v"), col("__id")).collect()
-      if (next.isEmpty) // fewer rows than k: proceed with what exists
-        return lloyd(base, centroids, maxIter, tol)
-      centroids = centroids :+ vecOf(next(0))
-      chosen = chosen + next(0).getString(1)
-    }
-    lloyd(base, centroids, maxIter, tol)
+      var centroids: Seq[Seq[Double]] = first.toSeq.map(vecOf)
+      var chosen: Set[String] = first.map(_.getString(1)).toSet
+      while (centroids.nonEmpty && centroids.size < k) {
+        val bestCos = centroids.map { cvec =>
+          val cn = math.sqrt(cvec.map(x => x * x).sum)
+          val safe = if (cn == 0.0) 1.0 else cn
+          dot(col("__v"), typedlit(cvec)) / (col("__nrm") * lit(safe))
+        }
+        val next = seedBase.filter(!col("__id").isInCollection(chosen))
+          .orderBy(array_max(array(bestCos: _*)).asc, col("__id"))
+          .limit(1).select(col("__v"), col("__id")).collect()
+        if (next.isEmpty) // fewer rows than k: proceed with what exists
+          return lloyd(base, centroids, maxIter, tol)
+        centroids = centroids :+ vecOf(next(0))
+        chosen = chosen + next(0).getString(1)
+      }
+      lloyd(base, centroids, maxIter, tol)
+    } finally (sampled.toSeq :+ base).foreach(
+      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint)
   }
 
   private def lloyd(base: DataFrame, seeds: Seq[Seq[Double]], maxIter: Int,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Iterative graph operators for the dedup pipeline. The one that matters
@@ -21,21 +22,18 @@ object Graph {
     * — `component` is the component's minimum vertex id.
     *
     * Scale posture: each round is one shuffled (edge ⋈ label) equi-join
-    * plus a groupBy-min — all narrow (two longs per row). Lineage is
-    * truncated every round with localCheckpoint (an iterative DataFrame
-    * loop otherwise compounds the plan until analysis itself dominates);
-    * superseded rounds' checkpoint blocks are freed as soon as the next
-    * round materializes, so the loop holds ONE working-set copy, not
-    * `rounds` copies. Convergence rides the same aggregation that computes
-    * the new labels (each vertex's own row is flagged, so the group sees
-    * both min-candidate and previous label) — the changed-count is then a
-    * filter over the already-materialized checkpoint, NOT a second
-    * label-join per round. Rounds needed = component diameter; near-dup
-    * clusters are shallow (a hub document links its variants), so a handful
-    * of rounds suffices. For adversarially long chains, switch to
-    * [[connectedComponentsStar]] (alternating large/small-star, Kiveris et
-    * al., "Connected Components in MapReduce and Beyond"), which converges
-    * in O(log² n) rounds — not needed for dedup graphs.
+    * plus a groupBy-min — all narrow (two longs per row); rounds run
+    * through [[Rounds.iterate]]. Convergence rides the same aggregation
+    * that computes the new labels (each vertex's own row is flagged, so
+    * the group sees both min-candidate and previous label) — the
+    * changed-count is then a filter over the already-materialized round,
+    * NOT a second label-join per round. Rounds needed = component
+    * diameter; near-dup clusters are shallow (a hub document links its
+    * variants), so a handful of rounds suffices. For adversarially long
+    * chains, switch to [[connectedComponentsStar]] (alternating
+    * large/small-star, Kiveris et al., "Connected Components in MapReduce
+    * and Beyond"), which converges in O(log² n) rounds — not needed for
+    * dedup graphs.
     *
     * If `maxIter` rounds pass without convergence the loop STOPS and the
     * returned labels are only partially propagated (components wider than
@@ -49,39 +47,32 @@ object Graph {
       .unionByName(edges.select(col(dst).as("a"), col(src).as("b")))
       .distinct()
       .localCheckpoint()
-    var labels = und.select(col("a").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // own rows are flagged so one aggregation yields BOTH the new min
+    // label and the previous one — convergence needs no second join.
+    // (Measured: an observe() signature riding the materialization is
+    // SLOWER here than this count — the post-checkpoint count scans an
+    // in-memory local RDD in ~30 ms, while Observation.get waits on the
+    // async listener bus per round.)
+    val res = Rounds.iterate(
+        und.select(col("a").as("v")).distinct().withColumn("label", col("v")),
+        maxIter, stop = r => r.index > 0 &&
+          r.frame.filter(col("label") =!= col("__old")).count() == 0) { r =>
+      val labels = r.frame.select(col("v"), col("label"))
       // neighbor labels flow along edges: b's label becomes a candidate for a
       val viaNeighbor = und
         .join(labels.withColumnRenamed("v", "b"), Seq("b"))
         .select(col("a").as("v"), col("label"))
-      // own rows are flagged so one aggregation yields BOTH the new min
-      // label and the previous one — convergence needs no second join.
-      // (Measured: an observe() metric riding the materialization is
-      // SLOWER here than this count — the post-checkpoint count scans an
-      // in-memory local RDD in ~30 ms, while Observation.get waits on the
-      // async listener bus per round.)
-      val next = labels.withColumn("__own", lit(true))
+      labels.withColumn("__own", lit(true))
         .unionByName(viaNeighbor.withColumn("__own", lit(false)))
         .groupBy(col("v"))
         .agg(min(col("label")).as("label"),
           max(when(col("__own"), col("label"))).as("__old"))
-        .localCheckpoint() // eager: materialized before the old round is freed
-      val changed = next.filter(col("label") =!= col("__old")).count()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(labels)
-      labels = next.select(col("v"), col("label"))
-      converged = changed == 0
-      iter += 1
     }
-    if (!converged)
+    if (!res.converged)
       System.err.println(s"[graft] connectedComponents: NOT converged after " +
         s"$maxIter rounds — components wider than $maxIter hops are split; " +
         "raise maxIter or use connectedComponentsStar")
-    labels.select(col("v").as("vertex"), col("label").as("component"))
+    res.frame.select(col("v").as("vertex"), col("label").as("component"))
   }
 
   /** PageRank in fixed-point INTEGER arithmetic — every rank is a BIGINT in
@@ -352,9 +343,10 @@ object Graph {
     * a groupBy-min plus an equi-join back — the same per-round shape as
     * label propagation, so the O(log² n) round bound is the whole win.
     * Convergence is detected by an (edge-count, xxhash64-xor) checksum of
-    * the canonicalized edge set riding the round's own aggregation — star
-    * steps are idempotent on their fixpoint, so a stable checksum IS the
-    * fixpoint (the hash guards against a same-size edge rewrite).
+    * the canonicalized edge set, the [[Rounds.iterate]] signature of each
+    * round — star steps are idempotent on their fixpoint, so a stable
+    * checksum IS the fixpoint (the hash guards against a same-size edge
+    * rewrite).
     */
   def connectedComponentsStar(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 50): DataFrame = {
@@ -363,32 +355,16 @@ object Graph {
       .distinct()
       .localCheckpoint()
     // canonical orientation a > b; self-loops drop out (rejoined at the end)
-    var e = edges.select(col(src).as("x"), col(dst).as("y"))
+    val canon = edges.select(col(src).as("x"), col(dst).as("y"))
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("a"),
         least(col("x"), col("y")).as("b"))
       .distinct()
-      .localCheckpoint()
     // XOR of per-edge hashes: order-independent, no ANSI sum overflow, and
-    // sound as a set fingerprint because the edge set is distinct. The
-    // checksum rides each round's OWN materialization as observe() metrics
-    // (localCheckpoint goes through withAction, so CollectMetrics fires) —
-    // no separate checksum job per round.
-    def sigMetrics: Seq[org.apache.spark.sql.Column] = Seq(
-      count(lit(1)).as("n"),
-      coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L))
-        .as("x"))
-    def readSig(obs: org.apache.spark.sql.Observation): (Long, Long) =
-      (obs.get("n").asInstanceOf[Long], obs.get("x").asInstanceOf[Long])
-    var sig = {
-      val r = e.agg(count(lit(1)),
-        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // sound as a set fingerprint because the edge set is distinct
+    val res = Rounds.iterate(canon, maxIter, signature = Seq(count(lit(1)),
+        call_function("bit_xor", xxhash64(col("a"), col("b"))))) { r =>
+      val e = r.frame
       // LARGE-STAR. Neighborhoods need both directions; m(u) = least(u, min Γ(u)).
       val nbrs = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v"))) // distinct by construction (a>b)
@@ -396,37 +372,27 @@ object Graph {
         .agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
       // (v, m) for v > u: v > u ≥ m, so orientation a > b is preserved
-      val large = nbrs.join(mins, Seq("u"))
+      val large = r.scratch(nbrs.join(mins, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("v").as("a"), col("m").as("b"))
         .distinct()
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
+        .localCheckpoint())
       // SMALL-STAR. Edges are already big→small, so Γ(u) here is all < u:
       // m = min Γ(u); attach u and every smaller neighbor except m itself.
       val minsS = large.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val obs = org.apache.spark.sql.Observation()
-      val small = large.join(minsS, Seq("a"))
+      large.join(minsS, Seq("a"))
         .select(col("b").as("v"), col("m"))
         .unionByName(minsS.select(col("a").as("v"), col("m")))
         .filter(col("v") =!= col("m")) // v ≥ m always, so what remains is v > m
         .select(col("v").as("a"), col("m").as("b"))
         .distinct()
-        .observe(obs, sigMetrics.head, sigMetrics.tail: _*)
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(large)
-      e = small
-      val nextSig = readSig(obs)
-      converged = nextSig == sig
-      sig = nextSig
-      iter += 1
     }
-    if (!converged)
+    if (!res.converged)
       System.err.println(s"[graft] connectedComponentsStar: NOT converged " +
         s"after $maxIter rounds — labels may be partially collapsed")
     // fixpoint stars: every non-center a points at its component min b;
     // centers and isolated/self-loop-only vertices label themselves
-    val labels = e.groupBy(col("a")).agg(min(col("b")).as("component"))
+    val labels = res.frame.groupBy(col("a")).agg(min(col("b")).as("component"))
       .select(col("a").as("v"), col("component"))
     vertices.join(labels, Seq("v"), "left")
       .select(col("v").as("vertex"),
@@ -451,11 +417,9 @@ object Graph {
     *
     * Scale posture: each round is one map-side-combinable degree count
     * plus two left-semi joins of the narrow (long, long) edge list
-    * against the shrinking survivor set — no row ever widens, and the
-    * edge frame is re-checkpointed per round so the loop holds one
-    * working copy (the [[connectedComponents]] discipline). Survivor
-    * sets only shrink, so every round is no more expensive than the
-    * first.
+    * against the shrinking survivor set — no row ever widens; rounds run
+    * through [[Rounds.iterate]]. Survivor sets only shrink, so every round
+    * is no more expensive than the first.
     *
     * Output: (`vertex`, `deg`) for every vertex with ≥1 surviving edge —
     * `deg` measured in the surviving subgraph after the last round.
@@ -463,24 +427,18 @@ object Graph {
   def kCorePeel(edges: DataFrame, src: String, dst: String, k: Int,
       iters: Int = 4): DataFrame = {
     require(iters >= 1, "kCorePeel needs at least one round")
-    var e = edges.select(col(src).cast("long").as("a"),
-        col(dst).cast("long").as("b"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val surv = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
+    val res = Rounds.iterate(edges.select(col(src).cast("long").as("a"),
+        col(dst).cast("long").as("b")), iters) { r =>
+      val e = r.frame
+      val surv = r.scratch(e.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("a").as("v"))
-        .localCheckpoint() // read twice (both endpoint screens)
-      val next = e
-        .join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
+        .localCheckpoint()) // read twice (both endpoint screens)
+      e.join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(surv)
-      e = next
     }
-    e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+    res.frame.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .select(col("a").as("vertex"), col("deg"))
   }
 
@@ -513,7 +471,6 @@ object Graph {
       iters: Int = 3): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
     require(iters >= 1, "kTrussPeel needs at least one round")
-    var e = edges.select(col(src).as("a"), col(dst).as("b")).localCheckpoint()
     def support(ed: DataFrame): DataFrame = {
       val tri = ed.as("e1")
         .join(ed.as("e2"), col("e1.b") === col("e2.a"))
@@ -526,16 +483,15 @@ object Graph {
         .groupBy(col("t.x").as("a"), col("t.y").as("b"))
         .agg(count(lit(1)).as("support"))
     }
-    for (_ <- 1 to iters) {
-      val keep = support(e).filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-      // k = 2 keeps support-0 edges, which have no support row at all —
-      // the semi-join would wrongly drop them, so short-circuit
-      val next = (if (k <= 2) e
-        else e.join(keep, Seq("a", "b"), "left_semi")).localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
-      e = next
-    }
+    val e = Rounds.iterate(edges.select(col(src).as("a"), col(dst).as("b")),
+        iters) { r =>
+      // k = 2 keeps support-0 edges, which have no support row at all (the
+      // semi-join would wrongly drop them): nothing peels, so the input is
+      // already the fixpoint
+      if (k <= 2) r.frame
+      else r.frame.join(support(r.frame).filter(col("support") >= k - 2)
+        .select(col("a"), col("b")), Seq("a", "b"), "left_semi")
+    }.frame
     e.join(support(e), Seq("a", "b"), "left")
       .select(col("a").as(src), col("b").as(dst),
         coalesce(col("support"), lit(0L)).as("support"))
@@ -602,7 +558,7 @@ object Graph {
     *
     * Per round: one narrow (long, long) edge⋈distance equi-join and one
     * map-side-combinable min — the [[connectedComponents]] shape with
-    * min(d+1) in place of min(label), frames re-checkpointed per round.
+    * min(d+1) in place of min(label), rounds run by [[Rounds.iterate]].
     *
     * Output: (`vertex`, `dist`) for every vertex in the edge list.
     */
@@ -617,19 +573,15 @@ object Graph {
       .distinct()
       .localCheckpoint()
     val sd = seeds.select(col(seedCol).cast("long").as("v")).distinct()
-    var d = verts.join(sd.withColumn("__s", lit(0L)), Seq("v"), "left")
-      .select(col("v"), col("__s").as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to maxDepth) {
-      val cand = e.join(d.filter(col("dist").isNotNull)
+    val d = Rounds.iterate(
+        verts.join(sd.withColumn("__s", lit(0L)), Seq("v"), "left")
+          .select(col("v"), col("__s").as("dist")), maxDepth) { r =>
+      val cand = e.join(r.frame.filter(col("dist").isNotNull)
           .select(col("v").as("a"), col("dist")), Seq("a"))
         .select(col("b").as("v"), (col("dist") + 1L).as("dist"))
-      val next = d.unionByName(cand)
+      r.frame.unionByName(cand)
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(d)
-      d = next
-    }
+    }.frame
     d.select(col("v").as("vertex"), col("dist"))
   }
 
@@ -696,7 +648,6 @@ object Graph {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], outSchema)
     val n = seedIds.length
-    val nWords = (n + 63) / 64
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .localCheckpoint()
@@ -723,31 +674,26 @@ object Graph {
     // interpreted-zip_with cost (~0.3 s/round) and keeps every value
     // exact (layer path counts are nonnegative, so the cumulative sum is
     // nonzero exactly where any layer's sig was).
-    var visited = layers(0).localCheckpoint()
-      .select(col("v"), col("sig").as("cum"))
-    for (_ <- 1 to maxDepth) {
+    val visited = Rounds.iterate(
+        layers(0).select(col("v"), col("sig").as("cum")), maxDepth) { r =>
       val cand = e
         .join(layers.last.select(col("v").as("a"), col("sig")), Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(org.apache.spark.sql.graftx.VectorSumExpressions
           .vectorSumLong(col("sig"), n).as("cand"))
-      val nf = cand.join(visited, Seq("v"), "left")
+      val nf = cand.join(r.frame, Seq("v"), "left")
         .select(col("v"), expr("CASE WHEN cum IS NULL THEN cand " +
           "ELSE zip_with(cand, cum, (x, m) -> " +
           "IF(m != 0L, CAST(0 AS BIGINT), x)) END").as("sig"))
         .filter(expr("exists(sig, x -> x != 0)"))
         .localCheckpoint()
-      val nextVisited = visited
+      layers :+= nf
+      r.frame
         .unionByName(nf.select(col("v"), col("sig").as("cum")))
         .groupBy(col("v"))
         .agg(org.apache.spark.sql.graftx.VectorSumExpressions
           .vectorSumLong(col("cum"), n).as("cum"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(visited)
-      visited = nextVisited
-      layers :+= nf
-    }
+    }.frame
     // backward dependency accumulation; `deltas` is always layer d+1
     var deltas = layers(maxDepth)
       .select(col("v"), col("sig"),
@@ -777,8 +723,7 @@ object Graph {
     // every dd in acc is eagerly checkpointed — the returned plan
     // references only those; the edge list, seed/layer frames, and the
     // final visited bitmap can release their blocks now
-    (Seq(e, visited) ++ layers).foreach(
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint)
+    (Seq(e, visited) ++ layers).foreach(unpersistLocalCheckpoint)
     acc.map(_.select(col("v"),
         expr("CAST(size(filter(sig, x -> x != 0)) AS BIGINT)").as("cnt"),
         expr("aggregate(delta, CAST(0 AS BIGINT), (a, x) -> a + x)")
@@ -835,33 +780,32 @@ object Graph {
       Row.fromSeq(s +:
         Seq.tabulate(nWords)(w => if (i / 64 == w) 1L << (i % 64) else 0L))
     }
-    def ckpt(df: DataFrame) = df.localCheckpoint()
-    var frontier = ckpt(spark.createDataFrame(
-      spark.sparkContext.parallelize(initRows.toSeq, 1), initSchema))
-    var reached = ckpt(frontier.select(col("v") +: wNames.map(col): _*))
+    var frontier = spark.createDataFrame(
+      spark.sparkContext.parallelize(initRows.toSeq, 1), initSchema)
+      .localCheckpoint()
     val orAgg = wNames.map(wn => expr(s"bit_or($wn)").as(wn))
     var outFrames = Vector(frontier.withColumn("dist", lit(0L)))
-    for (d <- 1 to maxDepth) {
+    val reached = Rounds.iterate(
+        frontier.select(col("v") +: wNames.map(col): _*), maxDepth) { r =>
       val cand = e
         .join(frontier.withColumnRenamed("v", "a"), Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(orAgg.head, orAgg.tail: _*)
       // first-reach mask: bits set by a neighbor this round minus bits
       // already owned — those are exactly the distance-d pairs
-      val nf = ckpt(cand
-        .join(reached.select(col("v") +:
+      frontier = cand
+        .join(r.frame.select(col("v") +:
           wNames.map(wn => col(wn).as(s"o$wn")): _*), Seq("v"), "left")
         .select(col("v") +: wNames.map(wn =>
           expr(s"$wn & ~coalesce(o$wn, CAST(0 AS BIGINT))").as(wn)): _*)
-        .filter(wNames.map(wn => col(wn) =!= 0L).reduce(_ || _)))
-      val nextReached = ckpt(reached.unionByName(nf)
-        .groupBy(col("v")).agg(orAgg.head, orAgg.tail: _*))
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(reached)
-      reached = nextReached
-      frontier = nf
-      outFrames :+= nf.withColumn("dist", lit(d.toLong))
-    }
+        .filter(wNames.map(wn => col(wn) =!= 0L).reduce(_ || _))
+        .localCheckpoint()
+      outFrames :+= frontier.withColumn("dist", lit(r.index + 1L))
+      r.frame.unionByName(frontier)
+        .groupBy(col("v")).agg(orAgg.head, orAgg.tail: _*)
+    }.frame
+    // the output reads the frontier frames only
+    unpersistLocalCheckpoint(reached)
     // explode packed bits back to (seed, vertex, dist) rows; the idx→seed
     // map is the collected sample, broadcast back as a tiny frame
     val idxDf = spark.createDataFrame(
@@ -893,7 +837,7 @@ object Graph {
     * `hll_union_agg`, then a narrow merge join with the previous state —
     * registers are monotone, so propagating full sketches is the
     * published recurrence), and N(h) reads off as the sum of per-vertex
-    * estimates.
+    * estimates — observed on each round's own [[Rounds.iterate]] job.
     *
     * `sources` picks whose ids enter the registers: pass all vertices for
     * the true all-pairs statistic, or a sample to make the estimate
@@ -914,34 +858,29 @@ object Graph {
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .localCheckpoint()
-    var state = sources
+    val init = sources
       .select(col(srcCol).cast("long").as("v"))
       .distinct()
       .groupBy(col("v"))
       .agg(hll_sketch_agg(col("v"), lit(lgK)).as("sk"))
-      .localCheckpoint()
-    def total(st: DataFrame): Long = st
-      .agg(sum(hll_sketch_estimate(col("sk"))).as("t"))
-      .collect()(0).getLong(0) // bounded: one scalar per round
-    var ests = Vector(0 -> total(state))
-    for (h <- 1 to maxDepth) {
+    // N(h) is a progress measure, not a fingerprint: run every round
+    val res = Rounds.iterate(init, maxDepth,
+        signature = Seq(sum(hll_sketch_estimate(col("sk")))),
+        stop = _ => false) { r =>
       val cand = e
-        .join(state.withColumnRenamed("v", "a"), Seq("a"))
+        .join(r.frame.withColumnRenamed("v", "a"), Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(hll_union_agg(col("sk"), lit(true)).as("nsk"))
-      val next = state.join(cand, Seq("v"), "full")
+      r.frame.join(cand, Seq("v"), "full")
         .select(col("v"),
           when(col("sk").isNull, col("nsk"))
             .when(col("nsk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("nsk"), true)).as("sk"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(state)
-      state = next
-      ests :+= h -> total(state)
     }
+    Seq(e, res.frame).foreach(unpersistLocalCheckpoint)
     import spark.implicits._
-    ests.toDF("h", "est")
+    res.signatures.zipWithIndex.map { case (t, h) => h -> t.getLong(0) }
+      .toDF("h", "est")
   }
 
   /** Seeded LABEL SPREADING (the Zhou et al. 2004 shape in fixed-point
@@ -1178,7 +1117,8 @@ object Graph {
     * Scale posture: the state is (vertex → component) plus the shrinking
     * (component → parent) table; every step is a narrow equi-join or a
     * map-side-combinable aggregation over (long, long, long) rows — no
-    * windows, no driver collects. Weights must already be integer
+    * windows, no driver collects. Both the round loop and the jump loop
+    * run through [[Rounds.iterate]]. Weights must already be integer
     * (quantize upstream) so argmin is exact cross-engine.
     *
     * Output: (`id_a`, `id_b`, `w_q`) — the forest edges, id_a < id_b.
@@ -1194,41 +1134,40 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    var comp = e0.select(col("u").as("vtx"))
-      .unionByName(e0.select(col("v").as("vtx")))
-      .distinct()
-      .withColumn("comp", col("vtx"))
-      .localCheckpoint()
-    // the checkpoint-backed frame behind `comp` (comp itself may be an
-    // RDD-boundary wrapper after the stats rebase below — unpersisting
-    // the wrapper would miss the real blocks)
-    var compCp = comp
-    var mst = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("w_q",
-          org.apache.spark.sql.types.LongType))))
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      // the cross-edge count rides the checkpoint's own materialization
-      // (observe — the connectedComponentsStar pattern): the emptiness
-      // probe costs no second job
-      val crossObs = org.apache.spark.sql.Observation()
-      val cross = e0
+    var mst = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("id_a", LongType),
+        StructField("id_b", LongType), StructField("w_q", LongType))))
+    // chain depth is bounded by the live component count, so ⌈log₂ comps⌉
+    // doublings reach every root — a closed-form bound (≤ 63, the count is
+    // a long) beats a stability-check join per jump, and it is NEVER
+    // truncated: stopping short leaves a merged tree under multiple
+    // labels, which a later round can close into a cycle
+    def doublings(comps: Long): Int =
+      64 - java.lang.Long.numberOfLeadingZeros(math.max(comps - 1, 1L))
+    val res = Rounds.iterate(e0.select(col("u").as("vtx"))
+        .unionByName(e0.select(col("v").as("vtx")))
+        .distinct()
+        .withColumn("comp", col("vtx")), maxRounds) { r =>
+      // STATS REBASE (load-bearing): localCheckpoint PRESERVES the origin
+      // plan's sizeInBytes, and the pointer-doubling self-join SQUARES it
+      // per jump — compounding across rounds into a doubly-exponential
+      // BigInteger that Catalyst's stats visitor then multiplies at
+      // million-digit widths (measured: round 3 of a K1000 graph never
+      // returns, driver pinned in BigInteger.multiplyToomCook3). Passing
+      // each relabeled round through an RDD boundary resets the estimate
+      // to the conf default, bounding per-round stats growth. The loop
+      // still frees the checkpoint itself, not this wrapper.
+      val comp = if (r.index == 0) r.frame
+        else spark.createDataFrame(r.frame.rdd, r.frame.schema)
+      // the cross-edge count rides the checkpoint's own materialization:
+      // the emptiness probe costs no second job
+      val (cross, nCross) = Rounds.checkpoint(e0
         .join(comp.select(col("vtx").as("u"), col("comp").as("cu")), Seq("u"))
         .join(comp.select(col("vtx").as("v"), col("comp").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .observe(crossObs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      if (crossObs.get("n").asInstanceOf[Long] == 0L) {
-        done = true
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(cross)
+        .filter(col("cu") =!= col("cv")), Seq(count(lit(1))))
+      if (nCross.getLong(0) == 0L) {
+        unpersistLocalCheckpoint(cross)
+        r.frame // no cross edge left: this labeling is the fixpoint
       } else {
         // both orientations so every component scores its incident cut;
         // the partner label rides the struct BEHIND the (w, u, v) total
@@ -1242,8 +1181,7 @@ object Graph {
             col("k.v").as("v"), col("k.t").as("t"))
           .localCheckpoint()
         // sel is checkpointed — nothing downstream depends on cross now
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(cross)
+        unpersistLocalCheckpoint(cross)
         mst = mst.unionByName(
           sel.select(col("u").as("id_a"), col("v").as("id_b"),
             col("w").as("w_q")).distinct())
@@ -1255,75 +1193,39 @@ object Graph {
           .select(col("x.c").as("c"),
             when(col("y.t") === col("x.c") && col("x.t") > col("x.c"),
               col("x.c")).otherwise(col("x.t")).as("p"))
-        // the component count rides the checkpoint's own materialization
-        // (observe) — no separate count job for the doubling bound
-        val pmapObs = org.apache.spark.sql.Observation()
-        var pmap = comp.select(col("comp").as("c")).distinct()
-          .join(hooked, Seq("c"), "left")
-          .withColumn("p", coalesce(col("p"), col("c")))
-          .observe(pmapObs, count(lit(1)).as("n"))
-          .localCheckpoint()
-        // chain depth is bounded by the live component count, so
-        // ⌈log₂ comps⌉ doublings reach every root — a closed-form bound
-        // (≤ 63, the count is a long) beats a stability-check join per
-        // jump, and it is NEVER truncated: stopping short leaves a merged
-        // tree under multiple labels, which a later round can close into
-        // a cycle
-        val needed = 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(pmapObs.get("n").asInstanceOf[Long] - 1, 1L))
         // TWO doublings compose per materialization (stride ×4 per job):
         // the self-join references the cached map 4× — scans of a tiny
         // pinned table — but the JOB count halves, and at gate scales the
         // jump loop is job-latency-bound, not scan-bound. Past the
         // fixpoint extra jumps are idempotent (p(root) = root), so an odd
-        // `needed` needs no remainder step.
-        var jump = 0
-        while (jump < needed) {
-          val once = pmap.as("x")
-            .join(pmap.as("y"), col("x.p") === col("y.c"))
+        // doubling count needs no remainder step. The map's row count (the
+        // live component count, the same every jump) is the signature that
+        // sets the bound; 32 jumps cover any long count.
+        val pmap = Rounds.iterate(comp.select(col("comp").as("c")).distinct()
+            .join(hooked, Seq("c"), "left")
+            .withColumn("p", coalesce(col("p"), col("c"))), 32,
+            signature = Seq(count(lit(1))),
+            stop = j => 2 * j.index >= doublings(j.signature.getLong(0))) { j =>
+          val once = j.frame.as("x")
+            .join(j.frame.as("y"), col("x.p") === col("y.c"))
             .select(col("x.c").as("c"), col("y.p").as("p"))
-          val next = once.as("x")
+          once.as("x")
             .join(once.as("y"), col("x.p") === col("y.c"))
             .select(col("x.c").as("c"), col("y.p").as("p"))
-            .localCheckpoint()
-          org.apache.spark.sql.graftx.CheckpointUtils
-            .unpersistLocalCheckpoint(pmap)
-          pmap = next
-          jump += 2
-        }
-        // STATS REBASE (load-bearing): localCheckpoint PRESERVES the origin
-        // plan's sizeInBytes, and the pointer-doubling self-join SQUARES it
-        // per jump — compounding across rounds into a doubly-exponential
-        // BigInteger that Catalyst's stats visitor then multiplies at
-        // million-digit widths (measured: round 3 of a K1000 graph never
-        // returns, driver pinned in BigInteger.multiplyToomCook3). Passing
-        // the materialized rows through an RDD boundary resets the
-        // estimate to the conf default, bounding per-round stats growth.
-        val relabeled = comp
-          .join(pmap.withColumnRenamed("c", "comp"), Seq("comp"))
+        }.frame
+        r.scratch(pmap)
+        comp.join(pmap.withColumnRenamed("c", "comp"), Seq("comp"))
           .select(col("vtx"), col("p").as("comp"))
-          .localCheckpoint()
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(pmap)
-        val nextComp = comp.sparkSession
-          .createDataFrame(relabeled.rdd, relabeled.schema)
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(compCp)
-        comp = nextComp
-        compCp = relabeled
       }
-      round += 1
     }
-    if (!done)
+    if (!res.converged)
       System.err.println(s"[graft] boruvkaMst: cross edges may remain " +
         s"after $maxRounds rounds — output is a forest but may not span; " +
         s"raise maxRounds")
     // the returned plan references the per-round sel checkpoints (the
     // forest edges, geometrically shrinking) but not e0 or the final
     // component map
-    org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e0)
-    org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(compCp)
+    Seq(e0, res.frame).foreach(unpersistLocalCheckpoint)
     mst.distinct()
   }
 
@@ -1342,9 +1244,10 @@ object Graph {
     * the engine's early exits.
     *
     * Scale: state is (vertex, label) × 2 plus the shrinking active set;
-    * each propagation step is one equi-join of the active edge list
-    * against a label table plus a map-combinable min — the PageRank
-    * shape. Budgets: `propRounds` bounds label propagation DISTANCE
+    * the outer, propagation and flood loops each run through
+    * [[Rounds.iterate]]. Each propagation step is one equi-join of the
+    * active edge list against a label table plus a map-combinable min —
+    * the PageRank shape. Budgets: `propRounds` bounds label propagation DISTANCE
     * (graph diameter-ish), `outerRounds` bounds condensation peeling;
     * vertices still live after the budget get scc_id −1 and a loud
     * stderr warning (the [[connectedComponents]] convention).
@@ -1364,76 +1267,47 @@ object Graph {
       .distinct()
       .localCheckpoint()
     val spark = e0.sparkSession
-    var assigned = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("scc_id",
-          org.apache.spark.sql.types.LongType))))
-    // a SEPARATE checkpoint from verts: the outer loop unpersists the old
-    // active set each round, and verts must survive to the final join.
-    // The active count rides each checkpoint's own materialization
-    // (observe) — per-round emptiness probes cost no extra job.
-    val obsA0 = org.apache.spark.sql.Observation()
-    var active = verts.observe(obsA0, count(lit(1)).as("n")).localCheckpoint()
-    var activeCount = obsA0.get("n").asInstanceOf[Long]
-    var outer = 0
+    var assigned = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("v", LongType),
+        StructField("scc_id", LongType))))
     var truncated = false
-    while (outer < outerRounds && !truncated && activeCount != 0L) {
+    // the active set is a SEPARATE checkpoint from verts (the loop frees
+    // each superseded active set; verts must survive to the final join),
+    // and its count is each round's signature: emptiness ends the loop
+    val outer = Rounds.iterate(verts, outerRounds,
+        signature = Seq(count(lit(1))),
+        stop = _.signature.getLong(0) == 0L) { r =>
+      val active = r.frame
       val ea = e0
         .join(active.withColumnRenamed("v", "a"), Seq("a"))
         .join(active.withColumnRenamed("v", "b"), Seq("b"))
         .localCheckpoint()
       // one monotone min-propagation to (early-exit) fixpoint over the
-      // forward (descendant) closure; the stable flag travels with the
-      // labels — assigning from a NON-fixpoint table would split a real
-      // SCC across ids (stale-label members miss this round's flood and
-      // get a different id later), so callers must skip on !stable.
+      // forward (descendant) closure; assigning from a NON-fixpoint table
+      // would split a real SCC across ids (stale-label members miss this
+      // round's flood and get a different id later).
       //
-      // Stability detection (r12) rides each round's OWN checkpoint as an
-      // observed EXACT monotone invariant (r13, VERDICT r12 ask #7): the
-      // vertex set is constant across rounds (every v reappears in the
-      // union's left leg) and labels only DECREASE under min-propagation,
-      // so (count, Σ l as DECIMAL(38,0)) unchanged ⇔ no label moved ⇔
-      // fixpoint — exactly, with no hash-collision bound (the r12 form
-      // compared count + bit_xor(xxhash64(v, l)), sound only up to a
-      // ~2⁻⁶⁴/round collision between successive label multisets). Same
-      // cost: one extra observed aggregate riding the checkpoint job; the
-      // former per-round stability join is still gone. (A delta-frontier
-      // variant — join only last round's changed labels — was measured
-      // SLOWER here: the extra join + changed-flag plan cost more than
-      // the shrinking wavefront saved at these depths.)
-      def propagate(): (DataFrame, Boolean) = {
-        val (from, to) = ("a", "b")
-        var lbl = active.withColumn("l", col("v")).localCheckpoint()
-        var sig: Option[(Long, BigDecimal)] = None
-        var j = 0
-        var stable = false
-        while (j < propRounds && !stable) {
-          val obs = org.apache.spark.sql.Observation()
-          val next = lbl
-            .unionByName(ea
-              .join(lbl.withColumnRenamed("v", to), Seq(to))
-              .select(col(from).as("v"), col("l")))
-            .groupBy(col("v")).agg(min(col("l")).as("l"))
-            .observe(obs, count(lit(1)).as("n"),
-              coalesce(sum(col("l").cast("decimal(38,0)")),
-                lit(0).cast("decimal(38,0)")).as("x"))
-            .localCheckpoint()
-          val nextSig = Some((obs.get("n").asInstanceOf[Long],
-            BigDecimal(obs.get("x").asInstanceOf[java.math.BigDecimal])))
-          stable = nextSig == sig
-          sig = nextSig
-          org.apache.spark.sql.graftx.CheckpointUtils
-            .unpersistLocalCheckpoint(lbl)
-          lbl = next
-          j += 1
-        }
-        (lbl, stable)
+      // Fixpoint signature: an EXACT monotone invariant. The vertex set is
+      // constant across rounds (every v reappears in the union's left leg)
+      // and labels only DECREASE under min-propagation, so (count, Σ l as
+      // DECIMAL(38,0)) unchanged ⇔ no label moved ⇔ fixpoint — with no
+      // hash-collision bound (a count + bit_xor(xxhash64(v, l)) form is
+      // sound only up to a ~2⁻⁶⁴/round collision). A sum that overflows
+      // to null throws in [[Rounds]] instead of faking a fixpoint. (A
+      // delta-frontier variant — join only last round's changed labels —
+      // was measured SLOWER here: the extra join + changed-flag plan cost
+      // more than the shrinking wavefront saved at these depths.)
+      val fwd = Rounds.iterate(active.withColumn("l", col("v")), propRounds,
+          signature = Seq(count(lit(1)),
+            sum(col("l").cast("decimal(38,0)")))) { p =>
+        p.frame
+          .unionByName(ea
+            .join(p.frame.withColumnRenamed("v", "b"), Seq("b"))
+            .select(col("a").as("v"), col("l")))
+          .groupBy(col("v")).agg(min(col("l")).as("l"))
       }
-      val (f, fStable) = propagate()
-      if (!fStable) {
+      val f = fwd.frame
+      if (!fwd.converged) {
         // deterministic recomputation over the same active set would hit
         // the identical non-fixpoint — no progress is possible; bail out
         // and let the still-active vertices surface as scc_id -1
@@ -1441,87 +1315,69 @@ object Graph {
           s"after $propRounds rounds — raise propRounds; " +
           s"unresolved vertices get scc_id -1")
         truncated = true
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(f)
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(ea)
+        Seq(f, ea).foreach(unpersistLocalCheckpoint)
+        active
       } else {
-      // color-restricted pivot reach (Orzan coloring): an SCC lies wholly
-      // inside one F-color (F is an SCC invariant), every v with F(v) = c
-      // reaches c within the color class (any intermediate w on the path
-      // has F(w) = c — smaller would contradict F(v) = c), so the color's
-      // pivot SCC is exactly the vertices FORWARD-reachable from c inside
-      // the class: one SCC assigned PER COLOR per round, which is what
-      // peels DAG-like condensations in logarithmic rounds instead of one
-      // pivot per round
-      val fa = f.select(col("v").as("a"), col("l").as("la"))
-      val fb = f.select(col("v").as("b"), col("l").as("lb"))
-      val colorEdges = ea.join(fa, Seq("a")).join(fb, Seq("b"))
-        .filter(col("la") === col("lb"))
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      // frontier-based flood (r12): only LAST round's newly-reached
-      // vertices can reach anything new, so the edge join runs against
-      // the frontier instead of the whole growing reach set, and the
-      // newly-reached count rides the checkpoint's materialization
-      // (observe) — emptiness IS the fixpoint test, no count jobs. The
-      // reached set is the union of the per-round frontiers (disjoint by
-      // construction: each round anti-joins what is already reached).
-      var frontier = f.filter(col("v") === col("l")).select(col("v"))
-        .localCheckpoint()
-      var reachFrames = Vector(frontier)
-      def reach = reachFrames.reduce(_ unionByName _)
-      var rj = 0
-      var rStable = false
-      while (rj < propRounds && !rStable) {
-        val obs = org.apache.spark.sql.Observation()
-        val nf = colorEdges
-          .join(frontier.withColumnRenamed("v", "a"), Seq("a"))
-          .select(col("b").as("v")).distinct()
-          .join(reach, Seq("v"), "left_anti")
-          .observe(obs, count(lit(1)).as("n"))
+        // color-restricted pivot reach (Orzan coloring): an SCC lies wholly
+        // inside one F-color (F is an SCC invariant), every v with F(v) = c
+        // reaches c within the color class (any intermediate w on the path
+        // has F(w) = c — smaller would contradict F(v) = c), so the color's
+        // pivot SCC is exactly the vertices FORWARD-reachable from c inside
+        // the class: one SCC assigned PER COLOR per round, which is what
+        // peels DAG-like condensations in logarithmic rounds instead of one
+        // pivot per round
+        val fa = f.select(col("v").as("a"), col("l").as("la"))
+        val fb = f.select(col("v").as("b"), col("l").as("lb"))
+        val colorEdges = ea.join(fa, Seq("a")).join(fb, Seq("b"))
+          .filter(col("la") === col("lb"))
+          .select(col("a"), col("b"))
           .localCheckpoint()
-        rStable = obs.get("n").asInstanceOf[Long] == 0L
-        if (rStable) org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(nf)
-        else { frontier = nf; reachFrames :+= nf }
-        rj += 1
+        // frontier-based flood: only LAST round's newly-reached vertices can
+        // reach anything new, so the edge join runs against the frontier
+        // instead of the whole growing reach set; an empty frontier is the
+        // fixpoint. The reached set is the union of the frontiers (disjoint
+        // by construction: each round anti-joins what is already reached),
+        // so the loop keeps every round's frame.
+        var reachFrames = Vector.empty[DataFrame]
+        def reach = reachFrames.reduce(_ unionByName _)
+        val flood = Rounds.iterate(f.filter(col("v") === col("l"))
+            .select(col("v")), propRounds, signature = Seq(count(lit(1))),
+            stop = _.signature.getLong(0) == 0L, keepRounds = true) { q =>
+          reachFrames :+= q.frame
+          colorEdges
+            .join(q.frame.withColumnRenamed("v", "a"), Seq("a"))
+            .select(col("b").as("v")).distinct()
+            .join(reach, Seq("v"), "left_anti")
+        }
+        val next = if (!flood.converged) {
+          // a partial flood under-covers the pivot SCC — assigning from it
+          // would report one true SCC under several ids; same bail-out as
+          // the propagation budget (deterministic retry cannot progress)
+          System.err.println(s"[graft] scc: pivot reach NOT at fixpoint " +
+            s"after $propRounds rounds — raise propRounds; " +
+            s"unresolved vertices get scc_id -1")
+          truncated = true
+          reachFrames :+= flood.frame
+          active
+        } else {
+          unpersistLocalCheckpoint(flood.frame)
+          val newly = f.join(reach, Seq("v"))
+            .select(col("v"), col("l").as("scc_id"))
+            .localCheckpoint()
+          assigned = assigned.unionByName(newly)
+          active.join(newly, Seq("v"), "left_anti")
+        }
+        // per-round scaffolding — nothing the result references
+        Seq(reach, colorEdges, f, ea).foreach(unpersistLocalCheckpoint)
+        next
       }
-      if (!rStable) {
-        // a partial flood under-covers the pivot SCC — assigning from it
-        // would report one true SCC under several ids; same bail-out as
-        // the propagation budget (deterministic retry cannot progress)
-        System.err.println(s"[graft] scc: pivot reach NOT at fixpoint " +
-          s"after $propRounds rounds — raise propRounds; " +
-          s"unresolved vertices get scc_id -1")
-        truncated = true
-      } else {
-        val newly = f.join(reach, Seq("v"))
-          .select(col("v"), col("l").as("scc_id"))
-          .localCheckpoint()
-        assigned = assigned.unionByName(newly)
-        val obsA = org.apache.spark.sql.Observation()
-        val nextActive = active.join(newly, Seq("v"), "left_anti")
-          .observe(obsA, count(lit(1)).as("n"))
-          .localCheckpoint()
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(active)
-        active = nextActive
-        activeCount = obsA.get("n").asInstanceOf[Long]
-      }
-      // per-round scaffolding — nothing the result references
-      Seq(reach, colorEdges, f, ea).foreach(
-        org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint)
-      }
-      outer += 1
     }
+    val activeCount = outer.signatures.last.getLong(0)
     if (activeCount != 0L)
       System.err.println(s"[graft] scc: $activeCount vertices " +
-        s"unresolved after $outer outer rounds — raise " +
+        s"unresolved after ${outer.rounds} outer rounds — raise " +
         (if (truncated) "propRounds" else "outerRounds"))
-    org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e0)
-    org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(active)
+    Seq(e0, outer.frame).foreach(unpersistLocalCheckpoint)
     // the returned plan references verts + the per-round `newly`
     // checkpoints behind `assigned` — those must outlive the return
     verts.join(assigned, Seq("v"), "left")
@@ -1537,9 +1393,10 @@ object Graph {
     * MIS vertices and their neighbors then deactivate. Isolated-by-
     * deactivation vertices win their (empty) neighborhood and join.
     *
-    * Scale: state is the active-vertex set; each round is one equi-join
-    * of the edge list against it plus a map-combinable min — the
-    * PageRank shape. `edges` must contain both orientations.
+    * Scale: state is the active-vertex set, carried by
+    * [[Rounds.iterate]]; each round is one equi-join of the edge list
+    * against it plus a map-combinable min — the PageRank shape. `edges`
+    * must contain both orientations.
     *
     * Output: (`vertex`, `mis_round`) — every vertex of the graph, with the
     * 1-based round it entered the MIS, 0 if it was dominated, or −1 if it
@@ -1555,21 +1412,15 @@ object Graph {
       .distinct()
       .localCheckpoint()
     val pri = struct(md5(col("vtx").cast("string")), col("vtx"))
-    // the active count rides each checkpoint's own materialization
-    // (observe) — the per-round emptiness probe costs no extra job
-    val obs0 = org.apache.spark.sql.Observation()
-    var active = e.select(col("a").as("vtx")).distinct()
-      .observe(obs0, count(lit(1)).as("n")).localCheckpoint()
-    var activeCount = obs0.get("n").asInstanceOf[Long]
-    var result = active.sparkSession.createDataFrame(
-      active.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vertex",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("mis_round",
-          org.apache.spark.sql.types.LongType))))
-    var round = 1
-    while (round <= maxRounds && activeCount != 0L) {
+    val spark = e.sparkSession
+    var result = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("vertex", LongType),
+        StructField("mis_round", LongType))))
+    // the active count is each round's signature: emptiness ends the loop
+    val res = Rounds.iterate(e.select(col("a").as("vtx")).distinct(),
+        maxRounds, signature = Seq(count(lit(1))),
+        stop = _.signature.getLong(0) == 0L) { r =>
+      val active = r.frame
       // live edges: both endpoints active
       val live = e
         .join(active.withColumnRenamed("vtx", "a"), Seq("a"))
@@ -1584,22 +1435,14 @@ object Graph {
         .localCheckpoint()
       result = result.unionByName(
         winners.select(col("vtx").as("vertex"),
-          lit(round.toLong).as("mis_round")))
+          lit(r.index + 1L).as("mis_round")))
       val dominated = e
         .join(winners.withColumnRenamed("vtx", "a"), Seq("a"))
         .select(col("b").as("vtx")).distinct()
-      val obsN = org.apache.spark.sql.Observation()
-      val nextActive = active
-        .join(winners.unionByName(dominated).distinct(),
-          Seq("vtx"), "left_anti")
-        .observe(obsN, count(lit(1)).as("n"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(active)
-      active = nextActive
-      activeCount = obsN.get("n").asInstanceOf[Long]
-      round += 1
+      active.join(winners.unionByName(dominated).distinct(),
+        Seq("vtx"), "left_anti")
     }
+    val activeCount = res.signatures.last.getLong(0)
     if (activeCount != 0L) {
       // budget exhausted with undecided vertices: emitting them as 0
       // ("dominated") would silently break maximality — use a distinct
@@ -1608,7 +1451,7 @@ object Graph {
         s"still active after $maxRounds rounds — emitted as mis_round -1 " +
         s"(undecided, NOT dominated); raise maxRounds")
       result = result.unionByName(
-        active.select(col("vtx").as("vertex"), lit(-1L).as("mis_round")))
+        res.frame.select(col("vtx").as("vertex"), lit(-1L).as("mis_round")))
     }
     val verts = e.select(col("a").as("vertex")).distinct()
     verts.join(result, Seq("vertex"), "left")

@@ -61,23 +61,26 @@ object Pq {
     val base = df.select(col(id).cast("string").as("__id"),
         col(vec).cast("array<double>").as("__v"))
       .localCheckpoint()
-    val dim = base.select(size(col("__v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val sub = dim / m
-    val seedBase =
-      if (seedSampleMod == 1L) base
-      else {
-        val sampled = base
-          .filter(pmod(xxhash64(col("__id")), lit(seedSampleMod)) === 0)
-        if (sampled.count() < k) base else sampled
-      }
-    val seedRows = seedBase.withColumn("__h", md5(col("__id")))
-      .orderBy(col("__h"), col("__id"))
-      .limit(k).select(col("__v")).collect()
-      .map(_.getSeq[Double](0).toSeq)
-    val books: Seq[Seq[Seq[Double]]] = (0 until m).map(mi =>
-      seedRows.toSeq.map(v => v.slice(mi * sub, mi * sub + sub)))
-    lloydRounds(base, books, m, sub, maxIter)
+    try {
+      val dim = base.select(size(col("__v"))).head().getInt(0)
+      require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+      val sub = dim / m
+      val seedBase =
+        if (seedSampleMod == 1L) base
+        else {
+          val sampled = base
+            .filter(pmod(xxhash64(col("__id")), lit(seedSampleMod)) === 0)
+          if (sampled.count() < k) base else sampled
+        }
+      val seedRows = seedBase.withColumn("__h", md5(col("__id")))
+        .orderBy(col("__h"), col("__id"))
+        .limit(k).select(col("__v")).collect()
+        .map(_.getSeq[Double](0).toSeq)
+      val books: Seq[Seq[Seq[Double]]] = (0 until m).map(mi =>
+        seedRows.toSeq.map(v => v.slice(mi * sub, mi * sub + sub)))
+      lloydRounds(base, books, m, sub, maxIter)
+    } finally org.apache.spark.sql.graftx.CheckpointUtils
+      .unpersistLocalCheckpoint(base)
   }
 
   /** Continue Lloyd from GIVEN codebooks — the warm restart OPQ's

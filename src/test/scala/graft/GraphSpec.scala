@@ -739,7 +739,7 @@ class GraphSpec extends AnyFunSuite {
   // so a change to the round loops cannot add jobs unnoticed; a change
   // that removes jobs lowers the pin in the same commit. Adaptive
   // execution makes some counts vary by a job or two between runs of the
-  // same code (boruvkaMst 59-61, scc 211-212), so each pin is the largest
+  // same code (boruvkaMst 57-61, scc 207-208), so each pin is the largest
   // count seen over repeated runs.
   private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -787,11 +787,11 @@ class GraphSpec extends AnyFunSuite {
       "bfsLayers" -> jobsOf(Graph.bfsLayers(path, "a", "b",
         Seq(1L).toDF("v"), "v", 3).collect()))
     val pinned = Map(
-      "connectedComponentsStar" -> 90,
-      "stronglyConnectedComponents" -> 212,
+      "connectedComponentsStar" -> 88,
+      "stronglyConnectedComponents" -> 208,
       "lubyMis" -> 41,
       "boruvkaMst" -> 61,
-      "hyperAnf" -> 23,
+      "hyperAnf" -> 15,
       "bfsLayers" -> 15)
     for ((op, n) <- counts)
       assert(n <= pinned(op), s"$op launched $n jobs, pinned ${pinned(op)} " +

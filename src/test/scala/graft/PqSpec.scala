@@ -363,4 +363,19 @@ class PqSpec extends AnyFunSuite {
     assert(spark.read.parquet(tmp).count() == 3)
   }
 
+  test("training frees its staging checkpoints: Clustering.fit (sampled " +
+    "seeding and the fewer-rows-than-k return) and residual codebooks") {
+    import graft.operators.Clustering
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val coarse = Clustering.fit(df, "vec_id", "embedding", 2, maxIter = 2,
+      seedSampleMod = 2)
+    assert(persisted == before, "Clustering.fit with a seeding sample")
+    assert(Clustering.fit(df, "vec_id", "embedding", 10, maxIter = 1)
+      .size == fixture.size)
+    assert(persisted == before, "Clustering.fit with k above the row count")
+    Pq.trainResidualCodebooks(df, "vec_id", "embedding", coarse, m = 2,
+      k = 2, maxIter = 2)
+    assert(persisted == before, "Pq.trainResidualCodebooks")
+  }
 }
